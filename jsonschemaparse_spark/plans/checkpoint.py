@@ -108,6 +108,7 @@ def run_with_checkpoint(
         fresh_metrics.write.mode("append").parquet(metrics_path)
         violations = res.violations().drop(_FILE_COL)
         violations.write.mode("append").parquet(_violations_path(state_dir))
+        res.unpersist()
     else:
         # Nothing fresh: return an EMPTY frame with the real violations
         # schema (key cols + 6 report fields) so downstream appends/unions
@@ -212,6 +213,9 @@ def run_json_with_checkpoint(
 
     keys = list(key_cols) if key_cols else [df.columns[0]]
     all_violations = []
+    # results stay alive (an Arrow group's cache with them) until the
+    # violations write below has read them, then are released
+    results = []
     fresh_metrics_rows = []
     n_typed = 0
 
@@ -256,7 +260,7 @@ def run_json_with_checkpoint(
             .withColumnRenamed(_FILE_COL, "file")
             .withColumn("snapshot_id", F.lit(snapshot_id))
         )
-        return res
+        results.append(res)
 
     if auto_files:
         _run(auto_files, "auto")
@@ -308,6 +312,8 @@ def run_json_with_checkpoint(
         else:
             fresh_viols.write.mode("append").parquet(violations_path)
         violations = fresh_viols.drop("snapshot_id", "file")
+        for res in results:
+            res.unpersist()
     else:
         from pyspark.sql.types import StructType
 

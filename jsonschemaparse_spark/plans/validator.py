@@ -14,7 +14,9 @@ COLUMNS (SURVEY.md §1.2); a NULL column value is an absent property.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import uuid
+import weakref
+from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
 import pandas as pd
@@ -33,6 +35,9 @@ from .kernels import (
 VALID_COL = "_jsp_valid"
 VIOLATIONS_COL = "_jsp_violations"
 PARTITION_COL = "_jsp_partition_id"
+# per-result literal inside a privately cached plan (see
+# ValidationResult._persist_private); never visible in `annotated`
+CACHE_ID_COL = "_jsp_cache_id"
 
 # columns with this prefix are engine internals, never row properties
 INTERNAL_PREFIX = "_jsp_"
@@ -59,6 +64,20 @@ class ValidationResult:
       violations() reconstructs the full report via a broadcast join.
     - full (Arrow path): the 6-field structs are built in Python where
       codegen size is irrelevant.
+
+    A batch result of the Arrow/Python path (validate_json_column's
+    mapInPandas branch) evaluates Python once: `annotated` reads a lazy
+    persist() made when the result is built (no job), so the first
+    action fills it and violations()/verdicts()/summary() all read the
+    same materialization. The cache is private to this result (a
+    per-result literal in the cached plan, so two results over the same
+    input never share it) and is released by unpersist() or, failing
+    that, when the result is garbage-collected. persist() and not
+    localCheckpoint(): the lazy checkpoint launched a job at call time
+    over a repartitioned input, and it loses its blocks with an executor,
+    where a persisted frame recomputes them from lineage. Streaming
+    inputs, the hybrid/typed JSON paths and the codegen path are not
+    cached.
     """
 
     annotated: DataFrame  # input columns + _jsp_valid + _jsp_violations
@@ -79,6 +98,26 @@ class ValidationResult:
     # engine='typed' and skip the UDF stage (identical results by
     # construction when nothing is flagged).
     flagged_observation: Optional[object] = None
+    # releases the private cache of `annotated`; None => nothing cached
+    _cache: Optional[weakref.finalize] = field(
+        default=None, init=False, repr=False, compare=False)
+
+    def _persist_private(self) -> None:
+        """Cache `annotated` lazily for this result alone (see the class
+        docstring). Streaming frames cannot be persisted and pass through."""
+        if self.annotated.isStreaming:
+            return
+        cached = self.annotated.withColumn(
+            CACHE_ID_COL, F.lit(uuid.uuid4().hex)).persist()
+        self.annotated = cached.drop(CACHE_ID_COL)
+        self._cache = weakref.finalize(self, cached.unpersist, False)
+        self._cache.atexit = False
+
+    def unpersist(self) -> None:
+        """Release the private cache, if any. Idempotent; frames derived
+        from this result stay valid and recompute from lineage."""
+        if self._cache is not None:
+            self._cache()
 
     def annotations(self) -> DataFrame:
         """(key..., constraint_id, keyword, value) — title/description

@@ -109,6 +109,7 @@ def main() -> None:
                 res.verdicts().write.mode("overwrite").parquet(
                     f"{args.output}/verdicts")
                 summary = res.summary()
+                res.unpersist()
     elif args.state and suite.schema is not None:
         run = run_with_checkpoint(
             spark, args.input, suite.schema, args.state,

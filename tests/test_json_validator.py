@@ -466,3 +466,172 @@ def test_bignumber_decimal_routes_to_exact_fallback(spark):
     got = {r["id"]: r["_jsp_valid"] for r in res.annotated.collect()}
     assert got == {1: True, 2: False, 3: True}
 
+
+
+# =========================================================================
+# one Python pass per Arrow-path result: the private, released cache
+# =========================================================================
+import gc  # noqa: E402
+
+# a string leaf with a pattern keeps engine='auto' off the typed route
+ARROW_RULES = {"type": "object", "required": ["s"],
+               "properties": {"s": {"type": "string", "pattern": "^a"}}}
+N_ARROW_ROWS = 60
+
+
+@pytest.fixture(scope="module")
+def arrow_input(spark, tmp_path_factory):
+    """Parquet over 2 files: good docs, pattern misses, syntax errors."""
+    path = str(tmp_path_factory.mktemp("arrow_once") / "in")
+    docs = [(i, '{"s": "a%d"}' % i if i % 3 else '{"s": "b"}' if i % 2 else '{"s": ')
+            for i in range(N_ARROW_ROWS)]
+    spark.createDataFrame(docs, "id long, doc string").repartition(2) \
+        .write.parquet(path)
+    return path
+
+
+@pytest.fixture
+def no_cache(spark):
+    spark.catalog.clearCache()
+    yield
+    spark.catalog.clearCache()
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _last_execution(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return ex.apply(ex.size() - 1).executionId() if ex.size() else -1
+
+
+def _python_rows(spark, since: int) -> int:
+    """Rows output by MapInPandas over the SQL executions after `since`."""
+    last = _last_execution(spark)
+    store = spark._jsparkSession.sharedState().statusStore()
+    total = 0
+    for eid in range(since + 1, last + 1):
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for n in range(nodes.size()):
+            node = nodes.apply(n)
+            if not node.name().startswith("MapInPandas"):
+                continue
+            for m in range(node.metrics().size()):
+                metric = node.metrics().apply(m)
+                opt = values.get(metric.accumulatorId())
+                if metric.name() == "number of output rows" and opt.isDefined():
+                    total += int(opt.get().replace(",", ""))
+    return total
+
+
+def _last_final_plan(spark) -> str:
+    store = spark._jsparkSession.sharedState().statusStore()
+    desc = store.execution(_last_execution(spark)).get().physicalPlanDescription()
+    return desc.split("\n\n", 1)[0].split("== Initial Plan ==", 1)[0]
+
+
+def test_arrow_result_evaluates_python_once(spark, arrow_input, no_cache):
+    """After one full action, verdicts() and summary() read the cached
+    annotation: an InMemoryTableScan, and no Python node outside it."""
+    res = validate_json_column(spark.read.parquet(arrow_input), "doc", ARROW_RULES,
+                               key_cols=["id"])
+    assert res.flagged_observation is None  # the Arrow branch, not hybrid
+    mark = _last_execution(spark)
+    n_viol = res.violations().count()
+    assert _python_rows(spark, mark) == N_ARROW_ROWS
+    for action in (lambda: res.verdicts().collect(), res.summary):
+        mark = _last_execution(spark)
+        action()
+        outside = _last_final_plan(spark).split("InMemoryRelation", 1)[0]
+        assert "InMemoryTableScan" in outside
+        assert not any(p in outside for p in ("MapInPandas", "EvalPython"))
+        assert _python_rows(spark, mark) == 0
+    assert res.summary()["n_violations"] == n_viol == N_ARROW_ROWS // 3
+    assert res.annotated.columns == ["id", VALID_COL, "_jsp_violations"]
+    res.unpersist()
+
+
+def test_arrow_results_do_not_share_a_cache(spark, arrow_input, no_cache):
+    rs = [validate_json_column(spark.read.parquet(arrow_input), "doc", ARROW_RULES,
+                               key_cols=["id"], engine="arrow") for _ in range(2)]
+    rs[0].summary()
+    mark = _last_execution(spark)
+    rs[1].summary()  # same input and rules: still its own Python pass
+    assert _python_rows(spark, mark) == N_ARROW_ROWS
+    rs[0].unpersist()
+    assert not _cache_empty(spark)
+    mark = _last_execution(spark)
+    assert rs[1].summary()["n_rows"] == N_ARROW_ROWS
+    assert _python_rows(spark, mark) == 0
+    rs[1].unpersist()
+    assert _cache_empty(spark)
+
+
+def test_arrow_result_cache_is_released(spark, arrow_input, no_cache):
+    """unpersist() and garbage collection each release the cache; frames
+    derived from a released result still compute."""
+    df = spark.read.parquet(arrow_input)
+    res = validate_json_column(df, "doc", ARROW_RULES, key_cols=["id"])
+    assert not _cache_empty(spark)
+    viols = res.violations()
+    res.summary()
+    res.unpersist()
+    assert _cache_empty(spark)
+    res.unpersist()  # idempotent
+    assert viols.count() == N_ARROW_ROWS // 3
+
+    res = validate_json_column(df, "doc", ARROW_RULES, key_cols=["id"])
+    res.summary()
+    assert not _cache_empty(spark)
+    del res
+    gc.collect()
+    assert _cache_empty(spark)
+
+
+def test_positions_report_leaves_no_cache(spark, arrow_input, no_cache):
+    """validate_json_positions drops its result; the release on GC frees
+    the cache before the report frame is even used."""
+    from jsonschemaparse_spark.plans.json_validator import validate_json_positions
+
+    out = validate_json_positions(spark.read.parquet(arrow_input), "doc",
+                                  ARROW_RULES, key_cols=["id"])
+    assert _cache_empty(spark)
+    assert out.count() == N_ARROW_ROWS // 3
+
+
+def test_non_arrow_results_are_not_cached(spark, arrow_input, no_cache):
+    from jsonschemaparse_spark.plans import validate_json_typed
+
+    df = spark.read.parquet(arrow_input)
+    int_rules = {"type": "object", "properties": {"k": {"type": "integer"}}}
+    results = [
+        validate_json_column(df, "doc", int_rules, key_cols=["id"]),  # hybrid
+        validate_json_column(df, "doc", int_rules, key_cols=["id"], engine="typed"),
+        validate_json_typed(df, "doc", int_rules, key_cols=["id"]),
+        validate_dataframe(df, {"properties": {"id": {"minimum": 0}}},
+                           key_cols=["id"]),  # codegen
+    ]
+    assert results[0].flagged_observation is not None
+    for res in results:
+        res.summary()
+        assert "InMemoryTableScan" not in _last_final_plan(spark)
+        res.unpersist()  # a no-op without a cache
+    assert _cache_empty(spark)
+
+
+def test_json_checkpoint_arrow_group_runs_python_once(spark, arrow_input, no_cache,
+                                                       tmp_path):
+    """run_json_with_checkpoint: an Arrow file group's per-file metrics and
+    its violations write share one Python pass; nothing stays cached."""
+    from jsonschemaparse_spark.plans.checkpoint import run_json_with_checkpoint
+
+    mark = _last_execution(spark)
+    run = run_json_with_checkpoint(spark, arrow_input, "doc", ARROW_RULES,
+                                   str(tmp_path / "state"), key_cols=["id"])
+    assert _python_rows(spark, mark) == N_ARROW_ROWS
+    assert _cache_empty(spark)
+    assert run.n_files_total == 2 and run.engine_used == "auto"
+    assert sum(r["n_violations"] for r in run.verdicts.collect()) == N_ARROW_ROWS // 3
