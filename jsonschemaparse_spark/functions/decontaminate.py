@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import spread_few_splits
 from .dedup import normalized_text
 
 CONTAMINATED_COL = "contaminated"
@@ -85,17 +86,13 @@ def contaminated_ids(train_df: DataFrame, eval_df: DataFrame, id_col: str,
     plain distinct; higher thresholds count distinct matched grams per
     doc (a groupBy keyed on doc id — map-side combine applies, and only
     matched rows reach it)."""
-    from ..plans.json_validator import _ensure_parallelism
-
     grams = eval_ngram_set(eval_df, eval_text_col, n)
     # The n-gram HOF Project is interpreted (CodegenFallback), so a
     # single-split input would serialize the whole corpus scan onto one
-    # core (NOTES pitfall #4, measured 4.7 s -> 0.6 s at sf0.1).
-    # _ensure_parallelism repartitions ONLY when splits < cores/2 — real
-    # multi-split corpora pass through shuffle-free, and only the
-    # two-column (id, text) projection is ever shuffled.
+    # core (NOTES pitfall #4, measured 4.7 s -> 0.6 s at sf0.1). Only
+    # the two-column (id, text) projection is ever shuffled.
     matches = (
-        _ensure_parallelism(train_df.select(id_col, text_col))
+        spread_few_splits(train_df.select(id_col, text_col))
         .select(F.col(id_col), F.explode(word_ngrams(F.col(text_col), n)).alias("ngram"))
         .join(F.broadcast(grams), "ngram")
     )

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import spread_few_splits
+
 
 def normalized_text(text: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
@@ -251,7 +253,6 @@ def minhash_signatures_agg(
     num_hashes: int = 8,
     k: int = 3,
     hash_mode: str = "portable",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(doc, sig array) via generator-expression hashing + MIN aggregate.
 
@@ -267,15 +268,9 @@ def minhash_signatures_agg(
     shingles to one row per doc BEFORE the exchange, so the shuffle carries
     (doc, num_hashes longs) — strictly less than the repartition barrier
     the HOF formulation needed."""
-    spark = df.sparkSession
-    target = num_partitions or spark.sparkContext.defaultParallelism
-    try:
-        if df.rdd.getNumPartitions() < max(target // 2, 2):
-            # single-split inputs would run the whole explode+partial-agg in
-            # one task; spread the NARROW (id, text) projection first
-            df = df.select(id_col, text_col).repartition(target)
-    except Exception:  # noqa: BLE001 - streaming/plan-only frames
-        pass
+    # single-split inputs would run the whole explode+partial-agg in one
+    # task; spread the NARROW (id, text) projection first
+    df = spread_few_splits(df.select(id_col, text_col))
     # r5 execution-shape fix: the former (doc, _w, explode(idxs)) select
     # let CollapseProject move the `_w = split(normalize(text))` projection
     # ABOVE the Generate, re-running the regex+split once per exploded
@@ -338,10 +333,9 @@ def _banded_rows(
     if sig_mode not in ("agg", "hof"):
         raise ValueError(f"sig_mode must be 'agg' or 'hof', got {sig_mode!r}")
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signatures_agg if sig_mode == "agg" else minhash_signatures_hof
-    with_sig = sig_fn(
-        df, id_col, text_col, num_hashes, k, hash_mode, num_partitions
-    )
+    args = (df, id_col, text_col, num_hashes, k, hash_mode)
+    with_sig = (minhash_signatures_agg(*args) if sig_mode == "agg"
+                else minhash_signatures_hof(*args, num_partitions))
     return with_sig.select(
         F.col("doc"),
         F.posexplode(
@@ -779,13 +773,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text",
     codegen with map-side combine — the shuffle carries one row of `bits`
     longs per doc. A NULL sentinel token keeps zero-token docs in the
     aggregate (all votes 0 -> simhash 0) without a join-back."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        if df.rdd.getNumPartitions() < max(target // 2, 2):
-            df = df.select(id_col, text_col).repartition(target)
-    except Exception:  # noqa: BLE001
-        pass
+    df = spread_few_splits(df.select(id_col, text_col))
     toks = F.split(normalized_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
     d = df.select(
         F.col(id_col),
@@ -1280,14 +1268,11 @@ def _substring_rows(df: DataFrame, id_col: str, text_col: str, k: int,
     of the single-exchange win; identical values, plan-pinned)."""
     if hash_mode not in ("md5", "fast"):
         raise ValueError(f"hash_mode must be 'md5' or 'fast', got {hash_mode!r}")
-    from ..plans.json_validator import _ensure_parallelism
-
     # the window generator is interpreted (CodegenFallback): a few-split
     # parquet input would serialize it onto a couple of cores (NOTES
-    # pitfall #4). Spread the NARROW (id, text) projection only when
-    # splits < cores/2 — real multi-split corpora pass through
-    # shuffle-free. Measured at sf1.0 (2-split input): 4.0 s -> 0.9 s.
-    df = _ensure_parallelism(df.select(id_col, text_col))
+    # pitfall #4). Spread the NARROW (id, text) projection. Measured at
+    # sf1.0 (2-split input): 4.0 s -> 0.9 s.
+    df = spread_few_splits(df.select(id_col, text_col))
     toks = _ws_tokens(text_col)
     # window via concat_ws over k element_at reads — no per-window
     # sub-array allocation in the interpreted path (same-value swap as
@@ -1436,13 +1421,11 @@ def remove_duplicate_substrings(
     which the plan test pins."""
     k = min_tokens
     out_col = out_col or text_col
-    from ..plans.json_validator import _ensure_parallelism
-
     covered = _substring_covered(df, id_col, text_col, k, hash_mode)
     # the rebuild expression below is interpreted and runs on df's own
     # splits (covered broadcasts, so the join adds no exchange): spread
     # few-split inputs so touched-doc rebuilds use every core
-    df = _ensure_parallelism(df)
+    df = spread_few_splits(df)
     toks = _ws_tokens(text_col)
     # evaluated only on join-matched (victim) rows, which have >= k
     # tokens by construction — sequence(0, size-1) never sees size 0.

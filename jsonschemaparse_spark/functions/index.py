@@ -47,6 +47,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import spread_few_splits
 from .dedup import norm_tokens as _tokens
 
 
@@ -77,11 +78,8 @@ def build_inverted_index(
 
     r7: few-split inputs are spread first (the tokenize generator is
     interpreted; a 2-split input serialized the build onto 2 cores —
-    measured 6.5 s -> 1.8 s at sf1.0; pass-through on multi-split
-    corpora)."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    df = _ensure_parallelism(df.select(id_col, text_col))
+    measured 6.5 s -> 1.8 s at sf1.0)."""
+    df = spread_few_splits(df.select(id_col, text_col))
     pos_tok = F.element_at(
         F.transform(
             F.array(_tokens(F.col(text_col))),

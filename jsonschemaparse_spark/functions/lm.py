@@ -48,6 +48,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import spread_few_splits
 from .dedup import norm_tokens as _tokens
 
 
@@ -58,13 +59,11 @@ def _bigram_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     element.
 
     r7: few-split inputs are spread first (interpreted generator — the
-    engine-wide NOTES pitfall #4; pass-through on real corpora). A doc's
+    engine-wide NOTES pitfall #4). A doc's
     bigram rows stay within one task either way — the generator emits
     them from one input row — so per-doc float aggregation order in
     scoring is unchanged."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    df = _ensure_parallelism(df.select(id_col, text_col))
+    df = spread_few_splits(df.select(id_col, text_col))
     pairs = F.element_at(
         F.transform(
             F.array(_tokens(F.col(text_col))),

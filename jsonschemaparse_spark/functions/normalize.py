@@ -46,6 +46,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..plans.parallelism import spread_few_splits
+
 # C0 controls except \t \n \r, plus DEL. \x0B/\x0C (VT, FF) are stripped
 # here so the collapse step only needs [ \t].
 CONTROL_RE = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
@@ -107,14 +109,12 @@ def normalize_text(
     rewrites prose spacing, which some gates measure).
     """
     # r7: spread few-split inputs so the Arrow normalize batches use
-    # every core (pass-through on multi-split corpora). Only when the
-    # Python step actually runs: form=None is a pure-codegen regexp
-    # chain where the spreading shuffle costs more than it saves (the
-    # c4_quality_flags / validate_dataframe measurement).
+    # every core. Only when the Python step actually runs: form=None is
+    # a pure-codegen regexp chain where the spreading shuffle costs more
+    # than it saves (the c4_quality_flags / validate_dataframe
+    # measurement).
     if form is not None:
-        from ..plans.json_validator import _ensure_parallelism
-
-        df = _ensure_parallelism(df)
+        df = spread_few_splits(df)
     out_col = output_col or text_col
     col: Column = F.col(text_col)
     if form is not None:

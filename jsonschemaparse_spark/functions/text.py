@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import spread_few_splits
+
 # BPE-ish token regex: word pieces or single non-space punctuation.
 TOKEN_RE = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
 
@@ -284,14 +286,11 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
     shuffle-free scan with all metrics inside whole-stage codegen (the
     per-line lambdas are array HOFs over short arrays, not Python).
 
-    r7: few-split inputs are spread first (_ensure_parallelism — a
-    no-op on real multi-split corpora): the metric HOFs are interpreted
-    (CodegenFallback), so a 2-split parquet input serialized the whole
-    gate onto 2 cores (measured at sf1.0: 4.7 s -> 0.8 s for the fused
-    gate after spreading)."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    df = _ensure_parallelism(df)
+    r7: few-split inputs are spread first (spread_few_splits): the
+    metric HOFs are interpreted (CodegenFallback), so a 2-split parquet
+    input serialized the whole gate onto 2 cores (measured at sf1.0:
+    4.7 s -> 0.8 s for the fused gate after spreading)."""
+    df = spread_few_splits(df)
     cols, keep = _gopher_flag_columns(F.col(text_col), char_fraction_max_items)
     return df.withColumns({**cols, "gopher_keep": keep})
 
@@ -640,9 +639,7 @@ def quality_flags(df: DataFrame, text_col: str = "text",
     # light regexp work where the shuffle is net-negative (see the
     # c4_quality_flags note)
     if gopher:
-        from ..plans.json_validator import _ensure_parallelism
-
-        df = _ensure_parallelism(df)
+        df = spread_few_splits(df)
     cols: dict[str, Column] = {}
     keep = F.lit(True)
     if gopher:

@@ -593,7 +593,7 @@ def test_quality_flags_single_projection_plan(spark, documents):
     well-split input is ONE Project subtree over ONE scan — no
     Exchange, no Generate, no Python eval, and exactly one Project
     node in the physical plan. (r7: few-split inputs are spread by
-    _ensure_parallelism first — pinned separately below — so the
+    spread_few_splits first — pinned separately below — so the
     zero-shuffle contract is asserted on an input that already has
     enough splits, via an eager localCheckpoint that truncates the
     spreading repartition out of the plan.)"""

@@ -140,12 +140,20 @@ def test_plan_window_scan_runs_exactly_once(spark):
     q = remove_duplicate_substrings(df, "doc_id", min_tokens=6) \
         .select(F.sum(F.length("text")))
     q.collect()
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    # the plan string cannot truncate: the length cap is raised to its
+    # maximum and every field is printed, so a cut-off plan can never
+    # hide the generator subtree and pass the count below
+    cap = "spark.sql.maxPlanStringLength"
+    prev = spark.conf.get(cap)
+    spark.conf.set(cap, str(2**31 - 16))
+    try:
+        plan = q._jdf.queryExecution().executedPlan().treeString(
+            True, False, 2**31 - 1, False, False)
+    finally:
+        spark.conf.set(cap, prev)
     final = plan.split("== Initial Plan ==")[0]
     assert "ReusedExchange" in final, final
-    # and no SECOND live window-generator subtree may appear (<= rather
-    # than == because plan-string truncation can hide the subtree
-    # entirely in some configs; two visible generators always fail)
+    # exactly one live window-generator subtree
     wingen = sum(1 for line in final.splitlines()
                  if "posexplode(element_at(transform" in line)
-    assert wingen <= 1, final
+    assert wingen == 1, final
