@@ -139,7 +139,15 @@ def materialize_index(index: InvertedIndex, table: str, *,
     serves searches; leave it default for build/join workloads.
 
     Sizing: n_buckets ~ postings_bytes / 256 MB at the target scale
-    (plans/bucketing.py guidance)."""
+    (plans/bucketing.py guidance).
+
+    Reserved names: the swap stages into `<table>__jsp_stage` and
+    `<table>_overflow__jsp_stage`, and renames the live tables aside to
+    `<table>__jsp_old` and `<table>_overflow__jsp_old`. A table already
+    holding one of those names is DROPPED without a check, so keep no
+    table of your own there. The swap is single-writer only: two
+    concurrent calls for the same `table` share those names and can drop
+    each other's tables."""
     from ..plans.bucketing import drop_table_and_location, write_bucketed
 
     spark = index.postings.sparkSession

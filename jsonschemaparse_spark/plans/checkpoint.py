@@ -19,10 +19,16 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .validator import VALID_COL, VIOLATIONS_COL, validate_dataframe
+from .kernels import VIOLATION_STRUCT
+from .validator import validate_dataframe
 
 _FILE_COL = "_jsp_file"
+_JSON_METRICS_SCHEMA = (
+    "snapshot_id string, file string, n_rows long, n_failed_rows long, "
+    "n_violations long, pass boolean, clean_typed_ok boolean"
+)
 
 
 @dataclass
@@ -51,6 +57,14 @@ def _read_verdicts(spark, metrics_path: str, snapshot_id: str,
         return spark.read.parquet(metrics_path).filter(
             F.col("snapshot_id") == snapshot_id
         )
+    return spark.createDataFrame([], schema)
+
+
+def _empty_violations(spark, df: DataFrame, keys) -> DataFrame:
+    """An EMPTY frame with the real violations schema (key cols + the 6
+    report fields, kernels.VIOLATION_FIELDS), so downstream appends/unions
+    don't produce a schema-mismatched parquet dir."""
+    schema = T.StructType([df.schema[k] for k in keys] + VIOLATION_STRUCT.fields)
     return spark.createDataFrame([], schema)
 
 
@@ -97,11 +111,7 @@ def run_with_checkpoint(
         )
         fresh_metrics = (
             res.annotated.groupBy(F.col(_FILE_COL).alias("file"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-                F.sum(res._n_viols()).alias("n_violations"),
-            )
+            .agg(*res._totals())
             .withColumn("pass", F.col("n_failed_rows") == 0)
             .withColumn("snapshot_id", F.lit(snapshot_id))
         )
@@ -110,17 +120,8 @@ def run_with_checkpoint(
         violations.write.mode("append").parquet(_violations_path(state_dir))
         res.unpersist()
     else:
-        # Nothing fresh: return an EMPTY frame with the real violations
-        # schema (key cols + 6 report fields) so downstream appends/unions
-        # don't produce a schema-mismatched parquet dir.
         keys = list(key_cols) if key_cols else [df.columns[0]]
-        from pyspark.sql.types import StructType
-        fields = [df.schema[k] for k in keys]
-        schema = StructType(fields).add("constraint_id", "string") \
-            .add("path", "string").add("keyword", "string") \
-            .add("expected", "string").add("actual", "string") \
-            .add("message", "string")
-        violations = spark.createDataFrame([], schema)
+        violations = _empty_violations(spark, df, keys)
 
     verdicts = _read_verdicts(
         spark, metrics_path, snapshot_id,
@@ -241,12 +242,7 @@ def run_json_with_checkpoint(
             )
         per_file = (
             res.annotated.groupBy(F.col(_FILE_COL).alias("file"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-                F.sum(res._n_viols()).alias("n_violations"),
-                F.sum(F.col(FLAG).cast("long")).alias("n_flagged"),
-            )
+            .agg(*res._totals(), F.sum(F.col(FLAG).cast("long")).alias("n_flagged"))
             .withColumn("pass", F.col("n_failed_rows") == 0)
             .collect()  # one tiny row per file
         )
@@ -284,11 +280,7 @@ def run_json_with_checkpoint(
         os.rename(tmp, path)
 
     if fresh_metrics_rows:
-        fresh = spark.createDataFrame(
-            fresh_metrics_rows,
-            "snapshot_id string, file string, n_rows long, n_failed_rows long, "
-            "n_violations long, pass boolean, clean_typed_ok boolean",
-        )
+        fresh = spark.createDataFrame(fresh_metrics_rows, _JSON_METRICS_SCHEMA)
         if reprocess and os.path.exists(metrics_path):
             keep = spark.read.parquet(metrics_path).filter(
                 F.col("snapshot_id") != snapshot_id
@@ -315,19 +307,9 @@ def run_json_with_checkpoint(
         for res in results:
             res.unpersist()
     else:
-        from pyspark.sql.types import StructType
+        violations = _empty_violations(spark, df, keys)
 
-        schema = StructType([df.schema[k] for k in keys]) \
-            .add("constraint_id", "string").add("path", "string") \
-            .add("keyword", "string").add("expected", "string") \
-            .add("actual", "string").add("message", "string")
-        violations = spark.createDataFrame([], schema)
-
-    verdicts = _read_verdicts(
-        spark, metrics_path, snapshot_id,
-        "snapshot_id string, file string, n_rows long, n_failed_rows long, "
-        "n_violations long, pass boolean, clean_typed_ok boolean",
-    )
+    verdicts = _read_verdicts(spark, metrics_path, snapshot_id, _JSON_METRICS_SCHEMA)
     engine_used = (
         "mixed" if (auto_files and typed_files)
         else "typed" if typed_files else "auto" if auto_files else "none"

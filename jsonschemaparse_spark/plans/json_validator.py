@@ -8,6 +8,13 @@ the chunk, mirroring the reference's StreamParser block writes
 (parse.js:318-326) at record-batch granularity. No per-row Python UDF calls —
 one Python invocation per Arrow batch (input_hint: "no per-row Python").
 
+Every Python stage turns documents into reports through ONE kernel,
+``_evaluate_docs`` (parse, validate, report per non-null document of an
+Arrow batch): the mapInPandas path and the hybrid path's rescue UDF call
+it once per batch, and it alone builds the document-level syntax and
+bigNumber rows (``_doc_record``), as the reference decides every report
+in one place (parse.js:342-1081, error.js:21-32).
+
 Malformed JSON does not fail the job: it yields a violation row with
 keyword='syntax' (FIXTURES.md §F7), matching parseInfo's never-throw-on-
 invalid contract (test/parseInfo.test.js:33-37) while still *reporting*
@@ -16,17 +23,19 @@ syntax errors.
 
 from __future__ import annotations
 
-import json
+import functools
 from typing import Iterator, Optional, Sequence
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema.compiler import CompiledSchema, compile_rules
-from ..schema.evaluate import Evaluator
+from ..schema.evaluate import Evaluator, check_limits
+from ..schema.relaxed_json import BigNumberError, loads_relaxed
 from ..schema.strict_json import loads_strict
 from .kernels import COMPACT_ARRAY, VIOLATION_ARRAY
 from .parallelism import spread_few_splits
@@ -53,8 +62,77 @@ def _out_schema(df: DataFrame, key_cols: Sequence[str],
     return T.StructType(fields)
 
 
-def _records(errors) -> list[dict]:
-    return [e.as_row() for e in errors]
+# a Python stage's per-document result: the rescue UDF and the per-column
+# fallback UDF (validator.py) return it
+DOC_RESULT = T.StructType([
+    T.StructField("valid", T.BooleanType(), False),
+    T.StructField("v", VIOLATION_ARRAY, False),
+])
+
+# PERMISSIVE from_json's corrupt-record side channel (see _permissive_parse)
+_CORRUPT_COL = "_jsp_corrupt"
+
+
+def _doc_record(constraint_id: str, keyword: str, message: str,
+                path: str = "") -> dict:
+    """A report row raised by the parse itself (syntax, bigNumber): the
+    document has no value to show, so expected/actual stay null."""
+    return {"constraint_id": constraint_id, "path": path, "keyword": keyword,
+            "expected": None, "actual": None, "message": message}
+
+
+def _evaluate_docs(docs: pd.Series, cs: CompiledSchema, evaluator: Evaluator, *,
+                   parse, limits=None,
+                   positions: bool = False) -> tuple[list[bool], list[list[dict]]]:
+    """The document kernel: parse, validate and report every non-null doc
+    of one Arrow batch. Returns (valids, viols) aligned with `docs`; a
+    null doc is (True, []).
+
+    parse: loads_strict or a functools.partial of loads_relaxed carrying
+    the dialect options. BigNumberError yields one bigNumber row, any
+    other parse error one syntax row. limits adds resourceLimit rows.
+    positions adds (line, column) to every row: the syntax error's own
+    position, or each violation's value anchor from a re-parse that runs
+    only for documents with violations (clean documents pay nothing)."""
+    if positions:
+        from ..api import _position_map, _positioned_syntax_error
+    n = len(docs)
+    valids = [True] * n
+    viols: list[list[dict]] = [[]] * n  # slots replaced, never mutated
+    arr = docs.to_numpy()
+    for i in np.flatnonzero(docs.notna().to_numpy()):
+        doc = arr[i]
+        try:
+            value = parse(doc)
+        except BigNumberError as e:
+            # positions rejects the relaxed parsers, the only ones raising it
+            recs = [_doc_record(cs.id, "bigNumber", str(e))]
+        except (ValueError, TypeError) as e:
+            if positions:
+                # the REAL scanner error keeps parser-disagreement docs
+                # descriptive (see _positioned_syntax_error)
+                err = _positioned_syntax_error(doc, e)
+                at = getattr(err, "position", None) or {}
+                recs = [{**_doc_record(cs.id, "syntax", str(err)),
+                         "line": at.get("line"), "column": at.get("column")}]
+            else:
+                recs = [_doc_record(cs.id, "syntax", f"Syntax error: {e}")]
+        else:
+            errors, _ = evaluator.validate(cs, value)
+            if limits is not None:
+                errors = errors + check_limits(value, limits)
+            recs = [e.as_row() for e in errors]
+            if positions and recs:
+                try:
+                    pos = _position_map(doc)
+                except ValueError:
+                    pos = {}
+                for r in recs:
+                    at = pos.get(r["path"]) or {}
+                    r.update(line=at.get("line"), column=at.get("column"))
+        valids[i] = not recs
+        viols[i] = recs
+    return valids, viols
 
 
 def _is_unconstrained(cs: CompiledSchema) -> bool:
@@ -226,9 +304,6 @@ def validate_json_column(
     hybrid = the actual needs_py flag; typed = always False (no Python
     stage exists); arrow = always True (every row goes through Python).
     """
-    from ..schema.evaluate import check_limits
-    from ..schema.relaxed_json import BigNumberError, loads_relaxed
-
     if engine not in ("auto", "arrow", "typed"):
         raise ValueError(
             f"engine must be one of 'auto', 'arrow', 'typed'; got {engine!r}"
@@ -275,99 +350,16 @@ def validate_json_column(
     # than cores (single parquet file), spread it so every core validates
     narrowed = spread_few_splits(narrowed)
     evaluator = Evaluator(extensions=extensions)
+    parse = (functools.partial(loads_relaxed, syntax=syntax, big_number=big_number,
+                               interoperable=interoperable)
+             if relaxed else loads_strict)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # cs/evaluator arrive via the pickled task closure — one deserialize
         # per task, shared across all its Arrow batches.
-        if positions:
-            from ..api import _position_map, _positioned_syntax_error
         for pdf in batches:
-            valids: list[bool] = []
-            viols: list[list[dict]] = []
-            for doc in pdf[json_col]:
-                if doc is None:
-                    valids.append(True)
-                    viols.append([])
-                    continue
-                try:
-                    if relaxed:
-                        value = loads_relaxed(
-                            doc, syntax=syntax, big_number=big_number,
-                            interoperable=interoperable,
-                        )
-                    else:
-                        value = loads_strict(doc)
-                except BigNumberError as e:
-                    valids.append(False)
-                    rec = {
-                        "constraint_id": cs.id,
-                        "path": "",
-                        "keyword": "bigNumber",
-                        "expected": None,
-                        "actual": None,
-                        "message": str(e),
-                    }
-                    if positions:  # unreachable today (relaxed is rejected
-                        # above) but keeps the record schema-complete
-                        rec.update(line=None, column=None)
-                    viols.append([rec])
-                    continue
-                except (ValueError, TypeError) as e:
-                    valids.append(False)
-                    if positions:
-                        # re-parse for the reference-position syntax error;
-                        # the REAL scanner error keeps parser-disagreement
-                        # docs descriptive (same contract as the old
-                        # validate_json_positions body)
-                        err = _positioned_syntax_error(doc, e)
-                        p = getattr(err, "position", None) or {}
-                        viols.append(
-                            [
-                                {
-                                    "constraint_id": cs.id,
-                                    "path": "",
-                                    "keyword": "syntax",
-                                    "expected": None,
-                                    "actual": None,
-                                    "message": str(err),
-                                    "line": p.get("line"),
-                                    "column": p.get("column"),
-                                }
-                            ]
-                        )
-                    else:
-                        viols.append(
-                            [
-                                {
-                                    "constraint_id": cs.id,
-                                    "path": "",
-                                    "keyword": "syntax",
-                                    "expected": None,
-                                    "actual": None,
-                                    "message": f"Syntax error: {e}",
-                                }
-                            ]
-                        )
-                    continue
-                errors, _ = evaluator.validate(cs, value)
-                if limits is not None:
-                    errors = errors + check_limits(value, limits)
-                valids.append(not errors)
-                if positions and errors:
-                    # anchor-map re-parse ONLY for violating docs: the
-                    # O(flagged) trickle, clean docs pay nothing extra
-                    try:
-                        pos = _position_map(doc)
-                    except ValueError:
-                        pos = {}
-                    recs = []
-                    for e in errors:
-                        at = pos.get(e.path) or {}
-                        recs.append({**e.as_row(), "line": at.get("line"),
-                                     "column": at.get("column")})
-                    viols.append(recs)
-                else:
-                    viols.append(_records(errors))
+            valids, viols = _evaluate_docs(pdf[json_col], cs, evaluator, parse=parse,
+                                           limits=limits, positions=positions)
             out = pdf[key_cols].copy()
             out[VALID_COL] = valids
             out[VIOLATIONS_COL] = viols
@@ -383,51 +375,32 @@ def _flagged_docs_udf(cs: CompiledSchema, extensions: bool):
     """Arrow-batched pandas UDF re-evaluating only the NON-NULL docs it
     receives (the hybrid path nulls out clean rows, so Arrow ships a
     column of mostly-nulls and Python cost is O(flagged rows)).
-    Returns struct<valid boolean, v array<full violation>>."""
-    from pyspark.sql import types as T
+    Returns DOC_RESULT."""
+    evaluator = Evaluator(extensions=extensions)
 
-    from .kernels import VIOLATION_ARRAY
-
-    out_type = T.StructType([
-        T.StructField("valid", T.BooleanType(), False),
-        T.StructField("v", VIOLATION_ARRAY, False),
-    ])
-    sid = cs.id
-
-    @F.pandas_udf(out_type)
+    @F.pandas_udf(DOC_RESULT)
     def check(docs: pd.Series) -> pd.DataFrame:
-        from ..schema.strict_json import loads_strict as _loads
-
-        ev = Evaluator(extensions=extensions)
-        import numpy as np
-
-        n = len(docs)
-        valids = [True] * n
-        viols: list[list[dict]] = [[]] * n  # slots replaced, never mutated
-        arr = docs.to_numpy()
-        for i in np.flatnonzero(docs.notna().to_numpy()):
-            doc = arr[i]
-            try:
-                value = _loads(doc)
-            except (ValueError, TypeError) as e:
-                valids[i] = False
-                viols[i] = [
-                    {
-                        "constraint_id": sid,
-                        "path": "",
-                        "keyword": "syntax",
-                        "expected": None,
-                        "actual": None,
-                        "message": f"Syntax error: {e}",
-                    }
-                ]
-                continue
-            errors, _ = ev.validate(cs, value)
-            valids[i] = not errors
-            viols[i] = _records(errors)
+        valids, viols = _evaluate_docs(docs, cs, evaluator, parse=loads_strict)
         return pd.DataFrame({"valid": valids, "v": viols})
 
     return check
+
+
+def _permissive_parse(json_col: str, schema: T.StructType,
+                      parsed: Column) -> tuple[Column, Column]:
+    """PERMISSIVE from_json of `json_col` into `schema`, plus the corrupt-
+    record side channel that makes malformed docs detectable without
+    FAILFAST (never fail the job — parseInfo contract). Returns the parse
+    expression and, for `parsed` (the caller's reference to its
+    materialized result), the predicate "parse failed": an all-null
+    struct or a filled corrupt-record field."""
+    parse_schema = T.StructType(
+        list(schema.fields) + [T.StructField(_CORRUPT_COL, T.StringType(), True)]
+    )
+    parse_expr = F.from_json(
+        F.col(json_col), parse_schema, {"columnNameOfCorruptRecord": _CORRUPT_COL},
+    )
+    return parse_expr, parsed.isNull() | parsed.getField(_CORRUPT_COL).isNotNull()
 
 
 def validate_json_hybrid(
@@ -447,8 +420,9 @@ def validate_json_hybrid(
     Rows from_json could not coerce (malformed JSON or a type-mismatched
     field) are flagged — at web scale the trickle, not the stream.
     Stage 2: ONE pandas UDF receives the doc column NULLED for clean rows
-    (Arrow ships mostly-nulls) and re-runs the Python evaluator for flagged
-    rows only, distinguishing real syntax errors from type mismatches with
+    (Arrow ships mostly-nulls) and re-runs the document kernel
+    (_evaluate_docs, as the Arrow path does) for flagged rows only,
+    distinguishing real syntax errors from type mismatches with
     the reference's exact keyword/message. Python cost is O(flagged docs);
     clean rows never leave the JVM.
 
@@ -466,13 +440,8 @@ def validate_json_hybrid(
     key_cols = list(key_cols)
     cs = rules if isinstance(rules, CompiledSchema) else compile_rules(rules)
 
-    parse_schema = T.StructType(
-        list(route_schema.fields) + [T.StructField("_jsp_corrupt", T.StringType(), True)]
-    )
-    parse_expr = F.from_json(
-        F.col(json_col), parse_schema,
-        {"columnNameOfCorruptRecord": "_jsp_corrupt"},
-    )
+    parsed = F.col("_jsp_mat").getField("p")
+    parse_expr, flagged = _permissive_parse(json_col, route_schema, parsed)
     # Materialize the parse ONCE per row behind a Generate barrier:
     # JsonToStructs is CodegenFallback and common-subexpression elimination
     # does not reliably dedupe it, so the dozens of field references below
@@ -489,10 +458,8 @@ def validate_json_hybrid(
             F.json_object_keys(F.col(json_col)).alias("keys"),
         ))).alias("_jsp_mat"),
     )
-    parsed = F.col("_jsp_mat").getField("p")
     compiler = ColumnCompiler(extensions=extensions)
     valid, cviols = compiler.compile_value(cs, parsed, route_schema, F.lit(""))
-    flagged = parsed.isNull() | parsed.getField("_jsp_corrupt").isNotNull()
     # EXPLICIT JSON null is invisible post-from_json (null field == absent
     # field), but the evaluator rejects null where a type is constrained —
     # flag those rows for Python re-evaluation. json_object_keys
@@ -635,7 +602,7 @@ def validate_json_typed(
     Use validate_json_column (Arrow/Python) only when the shape is dynamic.
     Corrupt JSON yields a NULL struct -> reported as a 'syntax' violation.
     """
-    from .kernels import COMPACT_ARRAY, ColumnCompiler
+    from .kernels import ColumnCompiler
     from .validator import _compiled
 
     cs = _compiled(rules)
@@ -650,29 +617,18 @@ def validate_json_typed(
     # input serializes the parse onto the split count — spread it like
     # the Arrow path does
     df = spread_few_splits(df)
-    # PERMISSIVE from_json yields an all-null struct for corrupt input; the
-    # corrupt-record side channel makes malformed docs detectable without
-    # FAILFAST (never fail the job — parseInfo contract)
-    parse_schema = T.StructType(
-        list(spark_schema.fields) + [T.StructField("_jsp_corrupt", T.StringType(), True)]
-    )
-    parse_expr = F.from_json(
-        F.col(json_col), parse_schema,
-        {"columnNameOfCorruptRecord": "_jsp_corrupt"},
-    )
+    parsed = F.col("_jsp_parsed")
+    parse_expr, unparsed = _permissive_parse(json_col, spark_schema, parsed)
     # single-eval barrier: JsonToStructs is CodegenFallback and CSE does not
     # reliably dedupe it across the per-field references (see
     # validate_json_hybrid); Generate materializes the parse once per row
     mat = df.select(
         *df.columns, F.explode(F.array(parse_expr)).alias("_jsp_parsed")
     )
-    parsed = F.col("_jsp_parsed")
     compiler = ColumnCompiler(extensions=extensions)
     # compile against the ORIGINAL schema: _jsp_corrupt is not a property
     valid, viols = compiler.compile_value(cs, parsed, spark_schema, F.lit(""))
-    syntax_bad = F.col(json_col).isNotNull() & (
-        parsed.isNull() | parsed.getField("_jsp_corrupt").isNotNull()
-    )
+    syntax_bad = F.col(json_col).isNotNull() & unparsed
     syntax_rule = compiler.register_rule(
         cs.id, "syntax", None, "Syntax error: malformed JSON"
     )

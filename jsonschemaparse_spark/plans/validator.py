@@ -26,11 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema.compiler import CompiledSchema, compile_rules
-from .kernels import (
-    VIOLATION_ARRAY,
-    ColumnCompiler,
-    ExpressionFallback,
-)
+from .kernels import VIOLATION_FIELDS, ColumnCompiler, ExpressionFallback
 
 VALID_COL = "_jsp_valid"
 VIOLATIONS_COL = "_jsp_violations"
@@ -63,7 +59,10 @@ class ValidationResult:
       static rule table — keeps large rule sets inside whole-stage codegen;
       violations() reconstructs the full report via a broadcast join.
     - full (Arrow path): the 6-field structs are built in Python where
-      codegen size is irrelevant.
+      codegen size is irrelevant. The one document kernel
+      (json_validator._evaluate_docs) builds them on the mapInPandas path
+      and in the hybrid rescue UDF's `py_viols_col`; the per-column
+      fallback fills `py_viols_col` from one column's value instead.
 
     A batch result of the Arrow/Python path (validate_json_column's
     mapInPandas branch) evaluates Python once: `annotated` reads a lazy
@@ -145,13 +144,21 @@ class ValidationResult:
         violating rows reach the join — at web scale that's the trickle,
         not the stream. Per-column-fallback violations (full encoding)
         union in at the end."""
-        v = F.explode(F.col(VIOLATIONS_COL)).alias("v")
+        def full(col: str, *extra: Column) -> DataFrame:
+            """Explode a full-encoding array column into report rows."""
+            return self.annotated.select(
+                *self.key_cols, F.explode(F.col(col)).alias("v")
+            ).select(*self.key_cols,
+                     *[F.col(f"v.{f}").alias(f) for f in VIOLATION_FIELDS], *extra)
+
         if self.rule_table is not None:
             from .kernels import RULE_TABLE_SCHEMA
 
             spark = self.annotated.sparkSession
             rules_df = spark.createDataFrame(self.rule_table or [], RULE_TABLE_SCHEMA)
-            exploded = self.annotated.select(*self.key_cols, v).select(
+            exploded = self.annotated.select(
+                *self.key_cols, F.explode(F.col(VIOLATIONS_COL)).alias("v")
+            ).select(
                 *self.key_cols,
                 F.col("v.rule_id").alias("rule_id"),
                 F.col("v.path").alias("path"),
@@ -169,38 +176,14 @@ class ValidationResult:
         else:
             # positioned results (validate_json_column(positions=True))
             # carry line/column in the struct — surface them as columns
-            vfields = {
-                f.name
-                for f in self.annotated.schema[VIOLATIONS_COL]
-                .dataType.elementType.fields
-            }
+            vfields = self.annotated.schema[VIOLATIONS_COL].dataType.elementType.names
             pos_cols = (
                 [F.col("v.line").alias("line"), F.col("v.column").alias("column")]
                 if "line" in vfields else []
             )
-            out = self.annotated.select(*self.key_cols, v).select(
-                *self.key_cols,
-                F.col("v.constraint_id").alias("constraint_id"),
-                F.col("v.path").alias("path"),
-                F.col("v.keyword").alias("keyword"),
-                F.col("v.expected").alias("expected"),
-                F.col("v.actual").alias("actual"),
-                F.col("v.message").alias("message"),
-                *pos_cols,
-            )
+            out = full(VIOLATIONS_COL, *pos_cols)
         if self.py_viols_col is not None:
-            pv = F.explode(F.col(self.py_viols_col)).alias("v")
-            out = out.unionByName(
-                self.annotated.select(*self.key_cols, pv).select(
-                    *self.key_cols,
-                    F.col("v.constraint_id").alias("constraint_id"),
-                    F.col("v.path").alias("path"),
-                    F.col("v.keyword").alias("keyword"),
-                    F.col("v.expected").alias("expected"),
-                    F.col("v.actual").alias("actual"),
-                    F.col("v.message").alias("message"),
-                )
-            )
+            out = out.unionByName(full(self.py_viols_col))
         return out
 
     def _n_viols(self) -> Column:
@@ -208,6 +191,16 @@ class ValidationResult:
         if self.py_viols_col is not None:
             n = n + F.size(F.col(self.py_viols_col))
         return n
+
+    def _totals(self, n_viols: Optional[Column] = None) -> list[Column]:
+        """The n_rows / n_failed_rows / n_violations aggregates every
+        report (verdicts, observed, summary, checkpoint metrics) is made
+        of. n_viols: a pre-projected per-row count, else _n_viols()."""
+        return [
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
+            F.sum(self._n_viols() if n_viols is None else n_viols).alias("n_violations"),
+        ]
 
     def verdicts(self) -> DataFrame:
         """Per-partition pass/fail (north rule). Partition-local agg: the
@@ -219,11 +212,7 @@ class ValidationResult:
                 self._n_viols().alias("_n_viol"),
             )
             .groupBy(PARTITION_COL)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-                F.sum("_n_viol").alias("n_violations"),
-            )
+            .agg(*self._totals(F.col("_n_viol")))
             .withColumn("pass", F.col("n_failed_rows") == 0)
         )
 
@@ -235,20 +224,11 @@ class ValidationResult:
         from pyspark.sql import Observation
 
         obs = Observation(name)
-        df = self.annotated.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-            F.sum(self._n_viols()).alias("n_violations"),
-        )
+        df = self.annotated.observe(obs, *self._totals())
         return df, obs
 
     def summary(self) -> dict:
-        row = self.annotated.select(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-            F.sum(self._n_viols()).alias("n_violations"),
-        ).first()
+        row = self.annotated.select(*self._totals()).first()
         return {
             "n_rows": row["n_rows"],
             "n_failed_rows": row["n_failed_rows"] or 0,
@@ -264,7 +244,8 @@ def _column_fallback_udf(sub, nm: str, extensions: bool, big_number: str = "defa
     """Arrow-batched pandas UDF evaluating ONE column's subschema in Python.
     Input is to_json(struct(col)) — Arrow ships just that column; null
     fields are omitted by to_json, matching absent-property semantics.
-    Returns struct<valid boolean, v array<full violation>>.
+    Returns DOC_RESULT. Its loop is not the document kernel's: it
+    validates obj[nm] under /nm, not the whole document.
 
     big_number != 'default' parses the doc with the relaxed loader so a
     decimal column's full-precision to_json digits hit the same policy
@@ -272,18 +253,11 @@ def _column_fallback_udf(sub, nm: str, extensions: bool, big_number: str = "defa
     binary64 before the evaluator ever saw the loss)."""
     import json as _json
 
-    from pyspark.sql import types as T
-
     from ..schema.evaluate import Evaluator
     from ..schema.relaxed_json import BigNumberError, loads_relaxed
-    from .kernels import VIOLATION_ARRAY
+    from .json_validator import DOC_RESULT, _doc_record
 
-    out_type = T.StructType([
-        T.StructField("valid", T.BooleanType(), False),
-        T.StructField("v", VIOLATION_ARRAY, False),
-    ])
-
-    @F.pandas_udf(out_type)
+    @F.pandas_udf(DOC_RESULT)
     def check(docs: pd.Series) -> pd.DataFrame:
         ev = Evaluator(extensions=extensions)
         valids, viols = [], []
@@ -297,11 +271,7 @@ def _column_fallback_udf(sub, nm: str, extensions: bool, big_number: str = "defa
                     obj = _json.loads(doc)
             except BigNumberError as e:
                 valids.append(False)
-                viols.append([{
-                    "constraint_id": sub.id, "path": f"/{nm}",
-                    "keyword": "bigNumber", "expected": None,
-                    "actual": None, "message": str(e),
-                }])
+                viols.append([_doc_record(sub.id, "bigNumber", str(e), path=f"/{nm}")])
                 continue
             if nm not in obj:  # NULL column => absent property => vacuous
                 valids.append(True)

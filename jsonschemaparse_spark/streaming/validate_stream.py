@@ -190,7 +190,7 @@ def validate_json_stream(
     engine='arrow': the exact-report Python evaluator via mapInPandas
     (streaming-compatible; each micro-batch ships Arrow batches). The
     HYBRID engine is deliberately not offered here: its flagged-count
-    Observation and parallelism probe are batch-only concepts.
+    Observation is a batch-only concept.
 
     Returns the annotated streaming frame (key cols + _jsp_valid +
     _jsp_violations); compose with windowed_verdicts/foreach_batch_sink.

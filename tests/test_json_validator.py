@@ -635,3 +635,74 @@ def test_json_checkpoint_arrow_group_runs_python_once(spark, arrow_input, no_cac
     assert _cache_empty(spark)
     assert run.n_files_total == 2 and run.engine_used == "auto"
     assert sum(r["n_violations"] for r in run.verdicts.collect()) == N_ARROW_ROWS // 3
+
+
+# ---------------------------------------------------------------------------
+# relaxed dialects at table scope: the Arrow path parses each document with
+# the same options as parse_info and reports what parse_info reports
+from jsonschemaparse_spark.plans.kernels import VIOLATION_FIELDS  # noqa: E402
+
+RELAXED_RULES = {"type": "object", "required": ["k"],
+                 "properties": {"k": {"type": "integer", "minimum": 0, "maximum": 50},
+                                "tags": {"type": "array", "maxItems": 1}}}
+
+
+def _assert_rows_match_parse_info(spark, docs, **opts):
+    from jsonschemaparse_spark.api import ParseSyntaxError, parse_info
+
+    df = spark.createDataFrame(list(enumerate(docs)), "id long, doc string")
+    res = validate_json_column(df, "doc", RELAXED_RULES, key_cols=["id"], **opts)
+    assert res.flagged_observation is None  # relaxed options: the Arrow path
+    got = {i: [] for i in range(len(docs))}
+    for r in res.violations().collect():
+        got[r["id"]].append(tuple(r[f] for f in VIOLATION_FIELDS))
+    root_id = compile_rules(RELAXED_RULES).id
+    n_syntax = 0
+    for i, doc in enumerate(docs):
+        if doc is None:
+            want = []
+        else:
+            try:
+                errors = parse_info(doc, RELAXED_RULES, **opts).errors
+            except ParseSyntaxError as e:
+                n_syntax += 1
+                want = [(root_id, "", "syntax", None, None, f"Syntax error: {e}")]
+            else:
+                # parse_info's bigNumber row is not tied to a schema node;
+                # the table row names the root schema
+                want = [tuple(root_id if f == "constraint_id" and e.keyword == "bigNumber"
+                              else e.as_row()[f] for f in VIOLATION_FIELDS)
+                        for e in errors]
+        assert sorted(got[i], key=repr) == sorted(want, key=repr), (doc, got[i], want)
+    assert 0 < n_syntax < len(docs)
+    verdicts = {r["id"]: r[VALID_COL] for r in res.annotated.collect()}
+    assert verdicts == {i: not got[i] for i in got}
+    res.unpersist()
+
+
+def test_relaxed_dialect_rows_match_parse_info(spark):
+    from jsonschemaparse_spark.schema.relaxed_json import SyntaxOptions
+
+    docs = [
+        '{"k": 1, // trailing comment\n "tags": [1,],}',  # every option, valid
+        "{'k': -3}",                  # single quotes; minimum
+        '{"k": "x", "tags": [1, 2],}',  # type + maxItems
+        "[1, 2,]",                    # trailing comma at the root; type
+        "{k: 1}",                     # unquoted keys are not enabled: syntax
+        '{"k": 1 /* block */}',       # block comments are not enabled: syntax
+        None,
+    ]
+    _assert_rows_match_parse_info(spark, docs, syntax=SyntaxOptions(
+        trailing_comma=True, line_comment=True, single_quote=True))
+
+
+def test_interoperable_rows_match_parse_info(spark):
+    docs = [
+        '{"k": 1, "k": 2}',           # duplicate keys: syntax
+        '{"k": 5}',
+        '{"k": 99}',                  # maximum
+        '{"k": 123456789012345678901234567890}',  # I-JSON number: bigNumber
+        '{"tags": []}',               # required
+        None,
+    ]
+    _assert_rows_match_parse_info(spark, docs, interoperable=True)
